@@ -9,6 +9,7 @@ pandas interchange, and the load-bearing ns-timestamp legacy flag
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -60,6 +61,24 @@ _MPB = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
 if _MPB:
     RUNTIME_CONFS["spark.sql.files.maxPartitionBytes"] = _MPB
 
+# Generated-class cache sized to the engine's codegen working set.
+# Spark 4.1.2 keeps compiled whole-stage/expression classes in a Guava
+# cache of spark.sql.codegen.cache.maxEntries (default 100) split into
+# 4 LRU segments, so a segment starts evicting past ~25 classes. One
+# sweep of all 261 keys at sf0.01 compiles 2,870 distinct classes;
+# the benchmark's 14-key serve pass needs ~90. With the default cache
+# every repeated query recompiles and puts Janino, then fresh JIT
+# warm-up, on its blocking path: a second sweep of every key
+# recompiled 3,846 classes in 144 s, against 46 classes in 116 s at
+# 4096 (local[4], 4 cores; `python tests/test_codegen_cache.py`). 4096
+# gives each segment 1024 slots, room for the whole suite with hash
+# skew to spare; JVM peak RSS stayed within 1 %. A static conf: it
+# goes on the SparkSession builder only (in RUNTIME_CONFS,
+# ensure_runtime_confs would fail to set it on every call), so a
+# session handed in from outside (`entry(spark)`) keeps Spark's 100
+# entries — same results, more compiles.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Set runtime-settable confs on an existing session (idempotent).
@@ -83,6 +102,26 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable in this session; builder path covers it
     return spark
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block; on exit — normal or
+    raising, including a failure while setting them — every key gets
+    its previous value back, or is unset if it had none. The one way
+    the engine scopes a session conf: sequential queries share the
+    session, so a leaked value would change a later query's plan."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def get_spark(
@@ -110,6 +149,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if SparkSession.getActiveSession() is None:
         # managed tables (bucketed writers) land in a scratch dir, not

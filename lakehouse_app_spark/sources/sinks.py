@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lakehouse_app_spark.session import scoped_confs
+
 
 def write_table(
     df: DataFrame,
@@ -111,13 +113,9 @@ def overwrite_partitions(
     dynamic mode scopes the delete to partitions the job actually
     produced, so a one-day backfill over a 5-year table rewrites
     1/1800th of the data."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    confs = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    with scoped_confs(df.sparkSession, confs):
         df.write.format(fmt).mode("overwrite").partitionBy(*partition_by).save(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def zorder_key(x, y, bits: int = 16):

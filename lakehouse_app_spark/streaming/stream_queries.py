@@ -19,6 +19,7 @@ code reads Kafka/file streams — only the source line changes.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import shutil
@@ -28,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import session_key
-from lakehouse_app_spark.session import ensure_runtime_confs
+from lakehouse_app_spark.runtime_cache import scratch_commit_dir, session_key
+from lakehouse_app_spark.session import ensure_runtime_confs, scoped_confs
 from lakehouse_app_spark.sources.tables import load_tables, normalize_event_ts
 
 _counter = itertools.count()
@@ -79,6 +80,21 @@ def _checkpoint_root() -> str | None:
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
+@contextlib.contextmanager
+def _replay_scope(spark: SparkSession, ckpt_prefix: str, confs: dict[str, str]):
+    """The bounded replay's scope: ``confs`` set on the session and a
+    fresh checkpoint dir yielded. The dir is created INSIDE the conf
+    scope, so a failing mkdtemp (ENOSPC on /dev/shm) still restores
+    the confs; on exit the checkpoint is removed — the replay ran to
+    completion and its WAL/state tree is dead weight on tmpfs."""
+    with scoped_confs(spark, confs):
+        ckpt = tempfile.mkdtemp(prefix=ckpt_prefix, dir=_checkpoint_root())
+        try:
+            yield ckpt
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(
     df: DataFrame, name_prefix: str, output_mode: str = "complete",
     partitions: int = 2, final_no_data_batch: bool = True,
@@ -115,11 +131,7 @@ def run_to_memory(
     scoped = {"spark.sql.shuffle.partitions": str(partitions)}
     if not final_no_data_batch:
         scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=_checkpoint_root())
-    try:
+    with _replay_scope(spark, f"ckpt_{name}_", scoped) as ckpt:
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -129,16 +141,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        # the replay ran to completion and the result lives in the
-        # memory sink — the checkpoint's WAL/state tree is dead
-        # weight in the RAM-backed scratch dir; reclaim it
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -347,9 +349,9 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink (ref R15's finalize-per-batch commit,
     `app/app.py:141`): each micro-batch lands as an atomic parquet
     append keyed by batch id; returns the read-back aggregate. The
-    bounded-replay demo writes to the same RAM-backed scratch root as
-    the checkpoints (_checkpoint_root); a production stream passes a
-    durable path — one argument, not a code change.
+    bounded-replay demo writes to a RAM-backed scratch_commit_dir, like
+    the checkpoints; a production stream passes a durable path — one
+    argument, not a code change.
 
     Exact since r11 (verdict item 3): in COMPLETE mode every batch
     appends the ENTIRE aggregate snapshot, so the rows carrying the
@@ -357,7 +359,10 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the read-back filters to that batch and the result equals the
     batch groupBy, side effect intact and proven by the read path
     itself (the rows exist only if the sink wrote them)."""
-    out_dir = tempfile.mkdtemp(prefix="foreach_sink_", dir=_checkpoint_root())
+    # deferred cleanup: the returned read-back is lazy over out_dir,
+    # so the tree is retired at the next call and reaped at the next
+    # release_caches() drain, never leaked one per call
+    out_dir = scratch_commit_dir("foreach_sink_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -382,11 +387,7 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.shuffle.partitions": "2",
         "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_foreach_", dir=_checkpoint_root())
-    try:
+    with _replay_scope(spark, "ckpt_foreach_", scoped) as ckpt:
         q = (
             agg.writeStream.foreachBatch(write_batch)
             .outputMode("complete")
@@ -395,13 +396,6 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
     rb = spark.read.parquet(out_dir)
     final = rb.join(
         F.broadcast(rb.groupBy().agg(F.max("batch_id").alias("batch_id"))),
@@ -1095,8 +1089,6 @@ def run_ivf_segment_append(
     # segment is retired at the next acquisition and reaped at the
     # harness drain (or past the retirement bound), never leaked one
     # RAM-backed tree per invocation (review r11)
-    from lakehouse_app_spark.runtime_cache import scratch_commit_dir
-
     seg_dir = os.path.join(scratch_commit_dir("ivf_seg_"), "segment")
 
     def append_segment(batch_df: DataFrame, batch_id: int) -> None:
@@ -1117,11 +1109,7 @@ def run_ivf_segment_append(
         "spark.sql.shuffle.partitions": "2",
         "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ivf_append_", dir=_checkpoint_root())
-    try:
+    with _replay_scope(spark, "ckpt_ivf_append_", scoped) as ckpt:
         q = (
             vstream.writeStream.foreachBatch(append_segment)
             .outputMode("append")
@@ -1130,13 +1118,6 @@ def run_ivf_segment_append(
             .start()
         )
         q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(seg_dir)
 
 
@@ -1669,7 +1650,8 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_confs(spark)
     staged = _staged_new_lineitem_dir(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
-    out_dir = tempfile.mkdtemp(prefix="pruned_join_", dir=_checkpoint_root())
+    # lazy read-back: deferred cleanup (q_stream_foreach_sink's)
+    out_dir = scratch_commit_dir("pruned_join_")
 
     stream = (
         spark.readStream.schema(schema)
@@ -1699,11 +1681,7 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.shuffle.partitions": "4",
         "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_pruned_join_", dir=_checkpoint_root())
-    try:
+    with _replay_scope(spark, "ckpt_pruned_join_", scoped) as ckpt:
         q = (
             stream.writeStream.foreachBatch(process)
             .outputMode("append")
@@ -1712,13 +1690,6 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select(
         "ship_month", "n_new", "new_qty", "n_base", "base_qty"
     )
@@ -1743,20 +1714,11 @@ def run_tws(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing."
         "enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, scoped):
         return run_to_memory(
             keyed, name, output_mode="update", partitions=partitions,
             final_no_data_batch=final_no_data_batch,
         )
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
 
 
 # ---------------------------------------- streaming change-feed apply

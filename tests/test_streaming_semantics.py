@@ -937,3 +937,65 @@ def test_late_data_key_drops_and_merges(spark, sf_dir, check_parity):
     assert agg["kept"] + agg["dropped"] == n_all
     assert not agg["overcount"]
     check_parity("q_stream_late_data")
+
+
+@pytest.mark.parametrize(
+    "key,prefix",
+    [
+        ("q_stream_foreach_sink", "foreach_sink_"),
+        ("q_stream_pruned_join", "pruned_join_"),
+    ],
+)
+def test_sink_output_dirs_reaped_at_release(spark, sf_dir, key, prefix):
+    """The foreachBatch sinks write under scratch_commit_dir: after two
+    calls and release_caches() only the newest output dir remains — the
+    one the last call's lazy read-back may still read."""
+    from lakehouse_app_spark import QUERIES, release_caches
+    from lakehouse_app_spark import runtime_cache as rc
+
+    dirs = []
+    for _ in range(2):
+        assert QUERIES[key](spark, sf_dir).count() > 0
+        dirs.append(rc._SCRATCH_DIRS[prefix])
+    release_caches()
+    assert not os.path.exists(dirs[0])
+    assert os.path.isdir(dirs[1])
+
+
+def test_replay_restores_confs_when_checkpoint_dir_fails(
+    spark, sf_dir, monkeypatch
+):
+    """A checkpoint dir that cannot be created (ENOSPC on /dev/shm)
+    must not leak the replay's scoped confs into the session: a leaked
+    noDataMicroBatches=false would silently drop later replays'
+    trailing-batch emissions."""
+    import errno
+    import tempfile
+
+    from lakehouse_app_spark import QUERIES
+    from lakehouse_app_spark.streaming import stream_queries as sq
+
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(suffix=None, prefix=None, dir=None):
+        if prefix and prefix.startswith("ckpt_"):
+            raise OSError(errno.ENOSPC, "No space left on device")
+        return real_mkdtemp(suffix, prefix, dir)
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    replays = [
+        lambda: sq.run_to_memory(
+            sq.events_stream(spark, sf_dir).groupBy("event_type").count(),
+            "ckpt_fail", final_no_data_batch=False,
+        ),
+        lambda: QUERIES["q_stream_foreach_sink"](spark, sf_dir),
+    ]
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    for replay in replays:
+        with pytest.raises(OSError):
+            replay()
+        assert {k: spark.conf.get(k, None) for k in keys} == before
