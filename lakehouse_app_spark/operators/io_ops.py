@@ -9,23 +9,11 @@ the full write path (partitioned layout, schema round-trip) that the
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_app_spark.registry import QUERIES, query
+from lakehouse_app_spark.runtime_cache import scratch_commit_dir
 from lakehouse_app_spark.sources.sinks import read_table, write_table
-
-_SCRATCH: dict[tuple[str, str], str] = {}
-
-
-def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """One stable scratch dir per (query, corpus), reused with
-    mode=overwrite across repeated invocations."""
-    key = (tag, sf_dir)
-    if key not in _SCRATCH:
-        _SCRATCH[key] = tempfile.mkdtemp(prefix=f"{tag}_")
-    return _SCRATCH[key]
 
 
 import lakehouse_app_spark.operators.aggregates  # noqa: F401  (registers q_agg_pricing's oracle)
@@ -42,10 +30,9 @@ from lakehouse_app_spark.registry import ORACLES as _ORACLES
 # could not see.
 @query("q_sink_roundtrip", oracle=_ORACLES["q_agg_pricing"])
 def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixed per-corpus scratch path + overwrite: these builders are
-    # never plan-cached (they schedule jobs), so a fresh mkdtemp per
-    # call leaked one full data copy per invocation (review r6)
-    out = _scratch_dir("sink_roundtrip", sf_dir)
+    # deferred-cleanup scratch: the returned read-back is lazy, so the
+    # dir lives until the next release_caches() after a newer call
+    out = scratch_commit_dir("sink_roundtrip_")
     result = QUERIES["q_agg_pricing"](spark, sf_dir)
     write_table(result, out, partition_by=["l_returnflag"])
     back = read_table(spark, out)
@@ -81,7 +68,7 @@ def q_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.sources.tables import load_tables
 
     t = load_tables(spark, sf_dir)
-    out = _scratch_dir("json_ingest", sf_dir)
+    out = scratch_commit_dir("json_ingest_")
     cols = ["doc_id", "source", "lang", "text"]
     # no coalesce(1): multiple JSONL part files verify identically
     # (explicit schema + order-insensitive aggregates) and the write
@@ -123,7 +110,7 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.sources.tables import load_tables
 
     t = load_tables(spark, sf_dir)
-    out = _scratch_dir("csv_ingest", sf_dir)
+    out = scratch_commit_dir("csv_ingest_")
     cols = ["doc_id", "lang", "text", "n_chars"]
     (
         t.documents.select(*cols)

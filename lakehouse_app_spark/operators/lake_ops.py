@@ -1008,7 +1008,7 @@ def q_zorder_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-committed their own COW lineage per invocation — ~4 lineages × 3
 # bench reps of pure write-path cost whose oracles replay logically in
 # ~0.01 s. The lineage is an INGEST-TIME artifact, so it now lives in
-# the durable layout catalog (layout.lineage_table, build-once per
+# the durable layout catalog (layout.corpus_dir, build-once per
 # corpus content, cold-drive certified to rebuild from scratch) and
 # the timed path measures what a user's query actually costs: the
 # feed computation, the time-travel reads, the restore read-back.
@@ -1023,7 +1023,7 @@ def _cdc_docs_lineage(spark: SparkSession, sf_dir: str) -> str:
     source='archived') → v3 APPEND (doc_id%10==4) → v4 RESTORE(v0).
     Serves [[q_time_travel]] (reads v0–v2), [[q_change_feed]] (feed
     v0→v3) and [[q_restore_version]] (reads v0–v4)."""
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         delete_where,
         read_snapshot,
@@ -1048,7 +1048,7 @@ def _cdc_docs_lineage(spark: SparkSession, sf_dir: str) -> str:
         )
         restore_version(spark, root, 0)
 
-    return lineage_table(spark, "cdc_docs", sf_dir, build)
+    return corpus_dir("cdc_docs", sf_dir, build)
 
 
 def _cdc_orders_lineage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -1063,7 +1063,7 @@ def _cdc_orders_lineage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     (lineage_root, feed_dir)."""
     import os
 
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         change_feed,
         read_snapshot,
@@ -1098,7 +1098,7 @@ def _cdc_orders_lineage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .parquet(os.path.join(root, "feed"))
         )
 
-    root = lineage_table(spark, "cdc_orders", sf_dir, build)
+    root = corpus_dir("cdc_orders", sf_dir, build)
     return root, os.path.join(root, "feed")
 
 
@@ -1988,7 +1988,7 @@ def q_merge_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "source", "n_chars")
@@ -2001,8 +2001,7 @@ def q_merge_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge commits v1 onto it (the q_vacuum treatment, r14). The
     # MERGE itself — the class's live write witness — still executes
     # one real snapshot commit per invocation.
-    src_root = lineage_table(
-        spark,
+    src_root = corpus_dir(
         "merge_multi_base",
         sf_dir,
         lambda root: write_snapshot(base, root, "base") and None,
@@ -2034,7 +2033,7 @@ def _mor_docs_lineage(spark: SparkSession, sf_dir: str) -> str:
     v3 OPTIMIZE ([[apply_deletion_vectors]]: the chain materialized
     copy-on-write). Serves [[q_merge_on_read]]; build-once
     (cold-drive certified), like every lineage layout."""
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         apply_deletion_vectors,
         delete_where_mor,
@@ -2049,7 +2048,7 @@ def _mor_docs_lineage(spark: SparkSession, sf_dir: str) -> str:
         delete_where_mor(spark, root, F.col("n_chars") >= 400, "doc_id")
         apply_deletion_vectors(spark, root)
 
-    return lineage_table(spark, "mor_docs", sf_dir, build)
+    return corpus_dir("mor_docs", sf_dir, build)
 
 
 @query(
@@ -2360,7 +2359,7 @@ def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from lakehouse_app_spark.runtime_cache import scratch_commit_dir
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         delete_where,
         expire_snapshots,
@@ -2384,7 +2383,7 @@ def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"source": F.lit("archived")},
         )
 
-    src = lineage_table(spark, "vacuum_docs", sf_dir, build)
+    src = corpus_dir("vacuum_docs", sf_dir, build)
     path = os.path.join(scratch_commit_dir("vacuum_"), "clone")
     shutil.copytree(src, path)
     v1, v2 = 1, 2
@@ -2433,7 +2432,7 @@ def _refs_orders_lineage(spark: SparkSession, sf_dir: str) -> str:
     reachability); v1 is physically expired. Serves
     [[q_snapshot_tag]]: the tag read works iff expiry honored the
     pin."""
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         create_tag,
         delete_where,
@@ -2462,7 +2461,7 @@ def _refs_orders_lineage(spark: SparkSession, sf_dir: str) -> str:
                 f"refs lineage expected to expire exactly [1], got {expired}"
             )
 
-    return lineage_table(spark, "refs_orders", sf_dir, build)
+    return corpus_dir("refs_orders", sf_dir, build)
 
 
 @query(
@@ -2542,7 +2541,7 @@ def _wap_orders_lineage(spark: SparkSession, sf_dir: str) -> str:
     ``main`` is what readers resolve — Iceberg's WAP branch pattern.
     [[q_wap_publish]] runs the audit + publish loop against this
     layout."""
-    from lakehouse_app_spark.sources.layout import lineage_table
+    from lakehouse_app_spark.sources.layout import corpus_dir
     from lakehouse_app_spark.sources.sinks import (
         create_branch,
         read_snapshot,
@@ -2574,7 +2573,7 @@ def _wap_orders_lineage(spark: SparkSession, sf_dir: str) -> str:
             "stage_bad",
         )
 
-    return lineage_table(spark, "wap_orders", sf_dir, build)
+    return corpus_dir("wap_orders", sf_dir, build)
 
 
 @query(

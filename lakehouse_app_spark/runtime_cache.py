@@ -192,14 +192,3 @@ def scratch_commit_dir(prefix: str) -> str:
         shutil.rmtree(rd, ignore_errors=True)
     return d
 
-
-def retire_scratch_dir(prefix: str, d: str) -> None:
-    """Register an externally-created scratch dir for deferred removal
-    at the next release_caches() drain — the scratch_commit_dir
-    retirement protocol exposed to caches that key their dirs
-    themselves (e.g. the streaming vector-staging memo, whose key
-    embeds the corpus fingerprint; advice r11). Never removes
-    eagerly: a still-live lazy DataFrame from an earlier invocation
-    may reference the superseded tree."""
-    with _SCRATCH_LOCK:
-        _RETIRED_SCRATCH.append((prefix, d))

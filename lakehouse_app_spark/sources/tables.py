@@ -66,9 +66,7 @@ def normalize_event_ts(raw: DataFrame) -> DataFrame:
 _VIEWS_FOR: dict[object, str] = {}
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> SimpleNamespace:
+def load_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
     """Load all testdata tables as DataFrames; register temp views.
 
     Returns a namespace with one attribute per table. Cached per
@@ -81,7 +79,7 @@ def load_tables(
     key = (skey, sf_dir)
     hit = _CACHE.get(key)
     if hit is not None:
-        if register_views and _VIEWS_FOR.get(skey) != sf_dir:
+        if _VIEWS_FOR.get(skey) != sf_dir:
             for name in TABLE_NAMES:
                 getattr(hit, name).createOrReplaceTempView(name)
             _VIEWS_FOR[skey] = sf_dir
@@ -93,10 +91,8 @@ def load_tables(
         if name == "events":
             df = normalize_event_ts(df)
         tables[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    if register_views:
-        _VIEWS_FOR[skey] = sf_dir
+        df.createOrReplaceTempView(name)
+    _VIEWS_FOR[skey] = sf_dir
     ns = SimpleNamespace(**tables)
     _CACHE[key] = ns
     return ns

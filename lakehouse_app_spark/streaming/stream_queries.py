@@ -31,36 +31,42 @@ from pyspark.sql import functions as F
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import scratch_commit_dir, session_key
 from lakehouse_app_spark.session import ensure_runtime_confs, scoped_confs
+from lakehouse_app_spark.sources.layout import corpus_dir
 from lakehouse_app_spark.sources.tables import load_tables, normalize_event_ts
 
 _counter = itertools.count()
 
-# file-stream sources must be directories; stage the single events
-# parquet into one (hardlink when possible), cached per sf_dir
-_STREAM_DIRS: dict[str, str] = {}
+# Stream sources are staged ONE way: a build-once corpus_dir in the
+# layout catalog, named after its recipe. The catalog keys each dir by
+# the corpus fingerprint (a regenerated corpus re-stages, gc_layouts
+# sweeps the old one), publishes it atomically, and lets every later
+# call and process reuse it.
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hardlink ``src`` to ``dst``; copy when the filesystem refuses."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copyfile(src, dst)
 
 
 def _staged_events_dir(sf_dir: str) -> str:
-    if sf_dir not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="events_stream_")
+    """File-stream sources must be directories: the events parquet
+    staged into one, hardlinked when possible."""
+
+    def build(root: str) -> None:
+        os.makedirs(root)
         src = f"{sf_dir}/events.parquet"
         if os.path.isdir(src):
             # directory-style parquet table: stage its data files
             for f in sorted(os.listdir(src)):
-                if f.startswith(("_", ".")):
-                    continue
-                try:
-                    os.link(os.path.join(src, f), os.path.join(d, f))
-                except OSError:
-                    shutil.copyfile(os.path.join(src, f), os.path.join(d, f))
+                if not f.startswith(("_", ".")):
+                    _link_or_copy(os.path.join(src, f), os.path.join(root, f))
         else:
-            dst = f"{d}/events.parquet"
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copyfile(src, dst)
-        _STREAM_DIRS[sf_dir] = d
-    return _STREAM_DIRS[sf_dir]
+            _link_or_copy(src, f"{root}/events.parquet")
+
+    return corpus_dir("stream_events", sf_dir, build)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,10 +516,34 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- left-outer stream join
 
-_OUTER_DIRS: dict[str, str] = {}
+def _sentinel_rows(schema, rows):
+    """Sentinel events as a pyarrow table in the fixture's raw
+    ``schema`` (its ts unit is kept exactly). ``rows`` are
+    (event_id, raw ts, hours ahead, event_type) tuples: the ts is the
+    raw int64 ``raw ts`` plus ``hours ahead`` in the schema's unit.
+    Every sentinel has user_id -1 (never matches a real user), value
+    0.0 and props '{}'; callers give them negative event_ids."""
+    import pyarrow as pa
+
+    ts_type = schema.field("ts").type  # fixture-dependent unit
+    unit_per_sec = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts_type.unit]
+    n = len(rows)
+    cols = {
+        "event_id": pa.array([r[0] for r in rows], pa.int64()),
+        "ts": pa.array(
+            [r[1] + r[2] * 3600 * unit_per_sec for r in rows], pa.int64()
+        ).cast(ts_type),
+        "user_id": pa.array([-1] * n, pa.int64()),
+        "event_type": pa.array([r[3] for r in rows], pa.string()),
+        "value": pa.array([0.0] * n, pa.float64()),
+        "props": pa.array(["{}"] * n, pa.string()),
+    }
+    return pa.table(
+        {f.name: cols[f.name].cast(f.type) for f in schema}, schema=schema
+    )
 
 
-def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
+def _staged_events_with_sentinel(sf_dir: str) -> str:
     """Events staged WITH one far-future sentinel file (one purchase +
     one click, ids < 0, user_id = -1) so the data batch itself lifts
     both sides' watermark past every real event. Watermarks advance
@@ -524,48 +554,29 @@ def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     per-batch planning + state-commit cost was ~2× the query, and the
     extra batches buy nothing: eviction only needs SOME batch to run
     after the watermark moved, which the no-data batch provides.)"""
-    if sf_dir not in _OUTER_DIRS:
-        import pyarrow as pa
+
+    def build(root: str) -> None:
         import pyarrow.parquet as pq
 
-        d = tempfile.mkdtemp(prefix="events_outer_")
+        os.makedirs(root)
         src = f"{sf_dir}/events.parquet"
-        dst = f"{d}/events.parquet"
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copyfile(src, dst)
-        src_schema = pq.read_schema(src).remove_metadata()
-        ts_type = src_schema.field("ts").type  # fixture-dependent unit
-        unit_per_sec = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts_type.unit]
+        _link_or_copy(src, f"{root}/events.parquet")
         max_raw = max(
             pq.read_table(src, columns=["ts"])["ts"].cast("int64").to_pylist()
         )
-        # Two sentinel FILES, each carrying one far-future purchase AND
-        # one far-future click: the global watermark is the MIN over
-        # both sides' watermark nodes, so BOTH event types must
-        # advance or the join state never expires. File 1 lifts the
-        # watermark past every real event; file 2 guarantees a batch
-        # RUNS with that watermark (outer eviction happens while
-        # processing a batch). Sentinel rows use user_id = -1 (never
-        # matches) and negative event_ids, filtered AFTER the join so
-        # they cannot lower either side's watermark.
-        far = max_raw + 10 * 3600 * unit_per_sec
-        cols = {
-            "event_id": pa.array([-1, -2], pa.int64()),
-            "ts": pa.array([far, far], pa.int64()).cast(ts_type),
-            "user_id": pa.array([-1, -1], pa.int64()),
-            "event_type": pa.array(["purchase", "click"], pa.string()),
-            "value": pa.array([0.0, 0.0], pa.float64()),
-            "props": pa.array(["{}", "{}"], pa.string()),
-        }
-        sentinel = pa.table(
-            {f.name: cols[f.name].cast(f.type) for f in src_schema},
-            schema=src_schema,
+        # The sentinel file carries one far-future purchase AND one
+        # far-future click: the global watermark is the MIN over both
+        # sides' watermark nodes, so BOTH event types must advance or
+        # the join state never expires. Sentinel rows use user_id = -1
+        # (never matches) and negative event_ids, filtered AFTER the
+        # join so they cannot lower either side's watermark.
+        sentinel = _sentinel_rows(
+            pq.read_schema(src).remove_metadata(),
+            [(-1, max_raw, 10, "purchase"), (-2, max_raw, 10, "click")],
         )
-        pq.write_table(sentinel, f"{d}/zz_flush.parquet")
-        _OUTER_DIRS[sf_dir] = d
-    return _OUTER_DIRS[sf_dir]
+        pq.write_table(sentinel, f"{root}/zz_flush.parquet")
+
+    return corpus_dir("stream_events_outer_flush", sf_dir, build)
 
 
 @query(
@@ -632,7 +643,7 @@ def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_confs(spark)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = spark.readStream.schema(raw_schema).parquet(
-        _staged_events_with_sentinel(spark, sf_dir)
+        _staged_events_with_sentinel(sf_dir)
     )
     src = normalize_event_ts(raw).withColumn("ts_l", F.col("ts").cast("timestamp"))
     purchases = (
@@ -799,26 +810,22 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- streaming vector search
 
-_QVEC_DIRS: dict[str, str] = {}
-
-
 def _staged_query_vectors(spark: SparkSession, sf_dir: str) -> str:
     """The audit query set (every 100th vector) staged as a parquet
     directory so it can replay as a bounded stream of incoming
     retrieval requests."""
-    with _STAGING_LOCK:
-        if sf_dir not in _QVEC_DIRS:
-            d = tempfile.mkdtemp(prefix="qvecs_stream_")
-            (
-                load_tables(spark, sf_dir)
-                .embeddings.where(F.col("vec_id") % 100 == 1)
-                .select(F.col("vec_id").alias("qid"), "embedding")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(d)
-            )
-            _QVEC_DIRS[sf_dir] = d
-        return _QVEC_DIRS[sf_dir]
+
+    def build(root: str) -> None:
+        (
+            load_tables(spark, sf_dir)
+            .embeddings.where(F.col("vec_id") % 100 == 1)
+            .select(F.col("vec_id").alias("qid"), "embedding")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(root)
+        )
+
+    return corpus_dir("stream_qvecs_m100r1", sf_dir, build)
 
 
 def _stream_vs_oracle() -> str:
@@ -955,58 +962,23 @@ def q_stream_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ streaming index append
 
-_VEC_STREAM_DIRS: dict[tuple[str, str], str] = {}
-# Staging-memo guard (advice r12): the check→build→retire→insert
-# sequence below is not atomic; two concurrent callers (streaming
-# listener threads are real in this module — the corpus_scalar RLock
-# precedent) could both build, with the second retiring the dir the
-# first just published. One lock serves both staging memos; RLock
-# because the builders call corpus helpers that may re-enter.
-import threading as _threading  # noqa: E402  (stdlib, no Spark dep)
-
-_STAGING_LOCK = _threading.RLock()
-
-
 def _staged_new_vectors_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving vector batch (vec_id % 10 = 7 stands in, same as
-    the batch key) staged as a parquet dir for bounded replay. The
-    memo key embeds the corpus CONTENT fingerprint (the
-    _COMPACT_LO_CACHE treatment, review r11): an in-session corpus
-    regeneration re-stages fresh vectors instead of serving a stale
-    batch the oracle no longer reads; superseded stagings are one
-    bounded dir per regeneration."""
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    the batch key) staged as a parquet dir for bounded replay."""
+    from lakehouse_app_spark.operators.ann import _APPEND_MOD, _APPEND_REM
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _VEC_STREAM_DIRS:
-            from lakehouse_app_spark.operators.ann import (
-                _APPEND_MOD,
-                _APPEND_REM,
-            )
-            from lakehouse_app_spark.runtime_cache import retire_scratch_dir
+    def build(root: str) -> None:
+        (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .where(F.col("vec_id") % _APPEND_MOD == _APPEND_REM)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(root)
+        )
 
-            d = tempfile.mkdtemp(prefix="vecs_stream_")
-            (
-                spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-                .where(F.col("vec_id") % _APPEND_MOD == _APPEND_REM)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(d)
-            )
-            # a regeneration superseded the old fingerprint's staging:
-            # retire it through the deferred scratch protocol (removed
-            # at the next release_caches drain, never yanked from
-            # under a still-live replay) instead of leaking one dir
-            # per regeneration (advice r11); `k != key` keeps the
-            # just-built staging out of the retirement set even if a
-            # future edit reorders the insert (advice r12)
-            for old in [
-                k for k in _VEC_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir("vecs_stream_", _VEC_STREAM_DIRS.pop(old))
-            _VEC_STREAM_DIRS[key] = d
-        return _VEC_STREAM_DIRS[key]
+    return corpus_dir(
+        f"stream_vecs_m{_APPEND_MOD}r{_APPEND_REM}", sf_dir, build
+    )
 
 
 def _stream_ivf_append_oracle() -> str:
@@ -1123,14 +1095,11 @@ def run_ivf_segment_append(
 
 # ------------------------------------------- streaming ingest dedup
 
-_DOC_STREAM_DIRS: dict[str, str] = {}
-
-
 def _staged_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving document batch (doc_id % 10 = 7) staged as a
     parquet dir so it can replay as a bounded file stream."""
-    if sf_dir not in _DOC_STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="docs_stream_")
+
+    def build(root: str) -> None:
         (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("doc_id") % 10 == 7)
@@ -1138,10 +1107,10 @@ def _staged_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
             # (a 1-file stage would shingle single-threaded)
             .repartition(8)
             .write.mode("overwrite")
-            .parquet(d)
+            .parquet(root)
         )
-        _DOC_STREAM_DIRS[sf_dir] = d
-    return _DOC_STREAM_DIRS[sf_dir]
+
+    return corpus_dir("stream_docs_m10r7", sf_dir, build)
 
 
 from lakehouse_app_spark.operators.dedup_ext import (  # noqa: E402
@@ -1488,7 +1457,6 @@ def session_timeout_transform(spark: SparkSession, stream: DataFrame) -> DataFra
 
 # ------------------- stream-static partition-pruned fact ingest
 
-_LI_STREAM_DIRS: dict[tuple[str, str], str] = {}
 _PRUNE_MOD = 10
 _PRUNE_REM = 7
 
@@ -1518,36 +1486,28 @@ def _staged_new_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving fact batch — the corpus's last-two-months rows
     with ``l_orderkey % 10 = 7`` (time-localized like a real ingest
     batch: pruning only matters when arrivals touch few partitions) —
-    staged for bounded replay. Fingerprint-keyed with deferred
-    retirement, the _staged_new_vectors_dir protocol."""
-    from lakehouse_app_spark.runtime_cache import retire_scratch_dir
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    staged for bounded replay."""
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _LI_STREAM_DIRS:
-            m0 = _anchor_month(spark, sf_dir)
-            d = tempfile.mkdtemp(prefix="li_stream_")
-            t = load_tables(spark, sf_dir)
-            (
-                t.lineitem.where(
-                    (F.col("l_orderkey") % _PRUNE_MOD == _PRUNE_REM)
-                    & (
-                        F.date_format(F.to_date("l_shipdate"), "yyyy-MM")
-                        >= F.lit(m0)
-                    )
+    def build(root: str) -> None:
+        m0 = _anchor_month(spark, sf_dir)
+        t = load_tables(spark, sf_dir)
+        (
+            t.lineitem.where(
+                (F.col("l_orderkey") % _PRUNE_MOD == _PRUNE_REM)
+                & (
+                    F.date_format(F.to_date("l_shipdate"), "yyyy-MM")
+                    >= F.lit(m0)
                 )
-                .select("l_orderkey", "l_quantity", "l_shipdate")
-                .repartition(4)
-                .write.mode("overwrite")
-                .parquet(d)
             )
-            for old in [
-                k for k in _LI_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir("li_stream_", _LI_STREAM_DIRS.pop(old))
-            _LI_STREAM_DIRS[key] = d
-        return _LI_STREAM_DIRS[key]
+            .select("l_orderkey", "l_quantity", "l_shipdate")
+            .repartition(4)
+            .write.mode("overwrite")
+            .parquet(root)
+        )
+
+    return corpus_dir(
+        f"stream_li_m{_PRUNE_MOD}r{_PRUNE_REM}", sf_dir, build
+    )
 
 
 def pruned_month_enrich(
@@ -1811,12 +1771,11 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------ watermark late-data drop (r14)
 
-_LATE_STREAM_DIRS: dict[tuple[str, str], str] = {}
 LATE_MOD, LATE_REM = 17, 5  # the deterministically-late row subset
 LATE_DELAY = "10 minutes"
 
 
-def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
+def _staged_late_events(sf_dir: str) -> str:
     """Three-file staged replay for the watermark late-data contract
     (SURVEY §2.2's one remaining key-less streaming row, r13 verdict
     item 2): file 1 = the ON-TIME rows (every event_id % {LATE_MOD}
@@ -1835,99 +1794,68 @@ def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
     watermark standing at batch START, so the co-delivery changes
     nothing semantically and saves one micro-batch; append mode then
     emits all surviving real windows exactly once in the automatic
-    no-data batch (the [[_staged_events_with_sentinel]] flush
-    trick). Sentinel rows
-    carry event_type 'zz_sentinel' and negative ids; consumers
-    filter the type, so no real (window × type) cell is polluted.
+    no-data batch (the outer-join staging's flush trick). Sentinel
+    rows come from the shared [[_sentinel_rows]] builder with event_type
+    'zz_sentinel' and negative ids; consumers filter the type, so no
+    real (window × type) cell is polluted.
     ``maxFilesPerTrigger=1`` + an explicit mtime stagger (the file
     source orders files by modification time; names tie-break
     lexicographically) pins the batch order. Files are carved from
     the RAW events parquet with pyarrow, preserving the fixture's
     timestamp unit exactly — the stream path then applies the same
-    ns→µs normalization as every batch read. Fingerprint-memoized
-    under _STAGING_LOCK like the sibling stagings."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    ns→µs normalization as every batch read. The rename that
+    publishes the corpus_dir keeps the staggered mtimes."""
 
-    from lakehouse_app_spark.runtime_cache import retire_scratch_dir
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    def build(root: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _LATE_STREAM_DIRS:
-            d = tempfile.mkdtemp(prefix="events_late_")
-            src = f"{sf_dir}/events.parquet"
-            tbl = pq.read_table(src)
-            ids = tbl["event_id"].to_numpy()
-            ts64 = tbl["ts"].cast("int64").to_numpy()
-            # the max-ts row is ALWAYS late-classified: its window end
-            # exceeds any on-time watermark, so the MERGE side of the
-            # contract has a structural witness at every corpus scale
-            # (the %-subset alone can miss the final open windows on a
-            # small corpus)
-            late_mask = pa.array(
-                (ids % LATE_MOD == LATE_REM) | (ts64 == ts64.max())
-            )
-            ontime = tbl.filter(pa.compute.invert(late_mask))
-            pq.write_table(ontime, f"{d}/batch1_ontime.parquet")
-            schema = tbl.schema.remove_metadata()
-            ts_type = schema.field("ts").type
-            unit_per_sec = {
-                "s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9
-            }[ts_type.unit]
-            max_ontime = max(ontime["ts"].cast("int64").to_pylist())
-            far = (
-                max(tbl["ts"].cast("int64").to_pylist())
-                + 10 * 3600 * unit_per_sec
+        os.makedirs(root)
+        tbl = pq.read_table(f"{sf_dir}/events.parquet")
+        ids = tbl["event_id"].to_numpy()
+        ts64 = tbl["ts"].cast("int64").to_numpy()
+        # the max-ts row is ALWAYS late-classified: its window end
+        # exceeds any on-time watermark, so the MERGE side of the
+        # contract has a structural witness at every corpus scale
+        # (the %-subset alone can miss the final open windows on a
+        # small corpus)
+        late_mask = pa.array((ids % LATE_MOD == LATE_REM) | (ts64 == ts64.max()))
+        ontime = tbl.filter(pa.compute.invert(late_mask))
+        pq.write_table(ontime, f"{root}/batch1_ontime.parquet")
+        schema = tbl.schema.remove_metadata()
+        max_ontime = max(ontime["ts"].cast("int64").to_pylist())
+        max_raw = max(tbl["ts"].cast("int64").to_pylist())
+        # spacer at the SAME instant as the on-time maximum: lets the
+        # already-advanced watermark take effect for the next batch
+        # without raising it
+        pq.write_table(
+            _sentinel_rows(schema, [(-2, max_ontime, 0, "zz_sentinel")]),
+            f"{root}/batch2_spacer.parquet",
+        )
+        # the flush sentinel RIDES IN the late batch: the late rows
+        # are filtered against the watermark standing at batch START
+        # (the sentinel's far-future ts only lifts it AFTER the
+        # batch), so the drop semantics are identical to a separate
+        # flush batch and the replay pays one fewer micro-batch
+        # (~0.35 s of per-batch planning + state commit at the
+        # measured stream floor)
+        pq.write_table(
+            pa.concat_tables(
+                [
+                    tbl.filter(late_mask),
+                    _sentinel_rows(schema, [(-1, max_raw, 10, "zz_sentinel")]),
+                ]
+            ),
+            f"{root}/batch3_late_flush.parquet",
+        )
+        files = ["batch1_ontime", "batch2_spacer", "batch3_late_flush"]
+        now = os.path.getmtime(f"{root}/batch3_late_flush.parquet")
+        for i, f in enumerate(files):
+            os.utime(
+                f"{root}/{f}.parquet", (now - 80 + 20 * i, now - 80 + 20 * i)
             )
 
-            def sentinel_row(eid: int, ts_raw: int):
-                cols = {
-                    "event_id": pa.array([eid], pa.int64()),
-                    "ts": pa.array([ts_raw], pa.int64()).cast(ts_type),
-                    "user_id": pa.array([-1], pa.int64()),
-                    "event_type": pa.array(["zz_sentinel"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array(["{}"], pa.string()),
-                }
-                return pa.table(
-                    {f.name: cols[f.name].cast(f.type) for f in schema},
-                    schema=schema,
-                )
-
-            # spacer at the SAME instant as the on-time maximum: lets
-            # the already-advanced watermark take effect for the next
-            # batch without raising it
-            pq.write_table(
-                sentinel_row(-2, max_ontime), f"{d}/batch2_spacer.parquet"
-            )
-            # the flush sentinel RIDES IN the late batch: the late
-            # rows are filtered against the watermark standing at
-            # batch START (the sentinel's far-future ts only lifts it
-            # AFTER the batch), so the drop semantics are identical
-            # to a separate flush batch and the replay pays one fewer
-            # micro-batch (~0.35 s of per-batch planning + state
-            # commit at the measured stream floor)
-            pq.write_table(
-                pa.concat_tables(
-                    [tbl.filter(late_mask), sentinel_row(-1, far)]
-                ),
-                f"{d}/batch3_late_flush.parquet",
-            )
-            files = ["batch1_ontime", "batch2_spacer", "batch3_late_flush"]
-            now = os.path.getmtime(f"{d}/batch3_late_flush.parquet")
-            for i, f in enumerate(files):
-                os.utime(
-                    f"{d}/{f}.parquet", (now - 80 + 20 * i, now - 80 + 20 * i)
-                )
-            for old in [
-                k for k in _LATE_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir(
-                    "events_late_", _LATE_STREAM_DIRS.pop(old)
-                )
-            _LATE_STREAM_DIRS[key] = d
-        return _LATE_STREAM_DIRS[key]
+    return corpus_dir(f"stream_events_late_m{LATE_MOD}r{LATE_REM}", sf_dir, build)
 
 
 @query(
@@ -2003,7 +1931,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     always-on ingest guard: state is bounded by the watermark
     horizon, and what the pipeline dropped is exactly auditable."""
     ensure_runtime_confs(spark)
-    d = _staged_late_events(spark, sf_dir)
+    d = _staged_late_events(sf_dir)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(raw_schema)

@@ -171,3 +171,44 @@ def test_scratch_retired_list_is_bounded():
     assert not os.path.exists(dirs[0])
     rc.scratch_commit_dir("sc_bound_")
     rc.release_caches()
+
+
+def test_scratch_dirs_come_from_one_place():
+    """A bare tempfile.mkdtemp is a scratch dir nothing removes. The
+    package creates them in exactly three places: the deferred-cleanup
+    scratch_commit_dir, the self-removing replay checkpoint and the
+    session's warehouse dir. Stream sources stage in the layout
+    catalog (layout.corpus_dir), never in the temp dir."""
+    import ast
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "lakehouse_app_spark",
+    )
+    allowed = {
+        ("runtime_cache.py", "scratch_commit_dir"),
+        ("streaming/stream_queries.py", "_replay_scope"),
+        ("session.py", "get_spark"),
+    }
+    found = set()
+
+    def scan(rel, node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and ast.unparse(child.func) == "tempfile.mkdtemp"
+            ):
+                found.add((rel, fn))
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(rel, child, child.name)
+            else:
+                scan(rel, child, fn)
+
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                scan(os.path.relpath(path, root), tree, "<module>")
+    assert found == allowed

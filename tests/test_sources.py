@@ -1204,10 +1204,10 @@ def test_stats_pruned_nd_decimal_stats_compare_numerically(spark, tmp_path):
     assert kept.count() == 2  # numerically intersecting -> read
 
 
-def test_lineage_table_builds_once_and_survives_processes(
+def test_corpus_dir_builds_once_and_survives_processes(
     spark, tmp_path, monkeypatch
 ):
-    """lineage_table commits a whole snapshot lineage exactly once per
+    """corpus_dir commits a whole snapshot lineage exactly once per
     corpus content: a second call (and a simulated fresh process —
     cleared in-process memo) reuses the durable commit byte-for-byte;
     a failed build leaves no readable half-lineage."""
@@ -1237,15 +1237,15 @@ def test_lineage_table_builds_once_and_survives_processes(
         write_snapshot(df, root, "base")
         write_snapshot(df.withColumn("s", F.lit("y")), root, "mut")
 
-    r1 = layout.lineage_table(spark, "lin", str(corpus), build)
+    r1 = layout.corpus_dir("lin", str(corpus), build)
     assert len(snapshot_history(r1)) == 2
     mtimes = {
         f: os.path.getmtime(os.path.join(r1, f)) for f in os.listdir(r1)
     }
-    r2 = layout.lineage_table(spark, "lin", str(corpus), build)
+    r2 = layout.corpus_dir("lin", str(corpus), build)
     assert r1 == r2 and len(calls) == 1  # in-process memo
-    layout._LINEAGES.clear()  # simulate a fresh process
-    r3 = layout.lineage_table(spark, "lin", str(corpus), build)
+    layout._PUBLISHED.clear()  # simulate a fresh process
+    r3 = layout.corpus_dir("lin", str(corpus), build)
     assert r3 == r1 and len(calls) == 1  # durable reuse, no rebuild
     assert {
         f: os.path.getmtime(os.path.join(r1, f)) for f in os.listdir(r1)
@@ -1262,10 +1262,12 @@ def test_lineage_table_builds_once_and_survives_processes(
         raise RuntimeError("boom")
 
     with pytest.raises(RuntimeError, match="boom"):
-        layout.lineage_table(spark, "lin2", str(corpus), bad_build)
-    assert layout._committed_version(
-        layout._table_dir("lin2", str(corpus))
-    ) is None
+        layout.corpus_dir("lin2", str(corpus), bad_build)
+    lin2 = layout._table_dir("lin2", str(corpus))
+    assert not os.path.exists(lin2)
+    assert not [
+        d for d in os.listdir(os.path.dirname(lin2)) if d.startswith("lin2")
+    ]  # the failed staging root is removed too
 
 
 def test_merge_into_multi_clause_semantics(spark, tmp_path):

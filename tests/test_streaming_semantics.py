@@ -999,3 +999,85 @@ def test_replay_restores_confs_when_checkpoint_dir_fails(
         with pytest.raises(OSError):
             replay()
         assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_stream_stagings_live_in_layout_catalog(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every stream source is staged as a build-once corpus_dir in the
+    layout catalog: (a) a corpus whose events.parquet is replaced
+    re-stages, so the replay reads the NEW rows, never a stale copy;
+    (b) a fresh process (cleared memo) reuses the published staging
+    without rebuilding it; (c) no staging lands in the temp dir."""
+    import fnmatch
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from lakehouse_app_spark.sources import layout
+    from lakehouse_app_spark.sources.tables import load_tables
+    from lakehouse_app_spark.streaming import stream_queries as sq
+
+    tmp_before = set(os.listdir(tempfile.gettempdir()))
+    corpus = str(tmp_path / "corpus")
+    shutil.copytree(sf_dir, corpus)
+    catalog = str(tmp_path / "catalog")
+    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", catalog)
+
+    def replayed_rows() -> int:
+        out = sq.run_to_memory(
+            sq.events_stream(spark, corpus).select("event_id"),
+            "staging_probe", output_mode="append", final_no_data_batch=False,
+        )
+        return out.count()
+
+    def stage_all() -> list[str]:
+        return [
+            sq._staged_events_dir(corpus),
+            sq._staged_events_with_sentinel(corpus),
+            sq._staged_query_vectors(spark, corpus),
+            sq._staged_new_vectors_dir(spark, corpus),
+            sq._staged_new_docs_dir(spark, corpus),
+            sq._staged_new_lineitem_dir(spark, corpus),
+            sq._staged_late_events(corpus),
+        ]
+
+    events = os.path.join(corpus, "events.parquet")
+    n_all = pq.read_metadata(events).num_rows
+    try:
+        assert replayed_rows() == n_all
+        # (a) replace the source table with different rows
+        half = os.path.join(corpus, "half.tmp")
+        pq.write_table(pq.read_table(events).slice(0, n_all // 2), half)
+        os.replace(half, events)
+        assert replayed_rows() == n_all // 2
+
+        stagings = stage_all()
+        fp_dir = os.path.join(catalog, layout.corpus_fingerprint(corpus))
+        assert len(set(stagings)) == len(stagings)
+        assert all(os.path.dirname(d) == fp_dir for d in stagings)
+        assert all(os.listdir(d) for d in stagings)
+        assert not [d for d in os.listdir(fp_dir) if "-staging-" in d]
+
+        # (b) a fresh process reuses every staging: no build runs
+        layout._PUBLISHED.clear()
+        built = []
+        real_rename = os.rename
+        monkeypatch.setattr(
+            os, "rename", lambda a, b: (built.append(b), real_rename(a, b))
+        )
+        again = stage_all()
+        monkeypatch.setattr(os, "rename", real_rename)
+        assert again == stagings and built == []
+        assert replayed_rows() == n_all // 2
+    finally:
+        load_tables(spark, sf_dir)  # point the session views back
+
+    # (c) nothing was staged under the temp dir
+    new = set(os.listdir(tempfile.gettempdir())) - tmp_before
+    leaked = [
+        d for d in new
+        if fnmatch.fnmatch(d, "*_stream_*") or fnmatch.fnmatch(d, "events_*")
+    ]
+    assert leaked == []
