@@ -18,7 +18,7 @@ the DuckDB oracle replicates the *same trained index* exactly
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark.operators.ann_index import (
@@ -45,6 +45,21 @@ _IVF_CHAIN, _IVF_CENTS, _IVF_ASG = lloyd_sql(N_CENTROIDS, KM_ITERS)
 
 BRP_TABLES = 4          # hash tables (MLlib numHashTables analog)
 BRP_BUCKET_LEN = 0.5    # bucket width over the unit-sphere projection
+# The oracle's bucket id of vector {e} along direction {d}; brp_bucket
+# is the same expression in Spark.
+BRP_BUCKET_SQL = (
+    "CAST(floor(round(list_cosine_similarity({e}, {d}), 6)"
+    f" / {BRP_BUCKET_LEN}) AS BIGINT)"
+)
+
+
+def brp_bucket(emb: Column, direction: Column) -> Column:
+    """floor(round(cos(emb, direction), 6) / BRP_BUCKET_LEN). Spark's
+    sequential-fold cosine matched DuckDB's list_cosine_similarity bit
+    for bit on every seeded vector tried, so a cosine within 1e-6 of a
+    bucket edge — the 6-dp half-way point included — lands in the
+    same bucket on both sides (tests/test_properties.py)."""
+    return F.floor(F.round(cosine_sim(emb, direction), 6) / F.lit(BRP_BUCKET_LEN))
 
 
 @query(
@@ -56,9 +71,7 @@ BRP_BUCKET_LEN = 0.5    # bucket width over the unit-sphere projection
     ),
     b AS (
       SELECT e.vec_id, d.j,
-             CAST(floor(round(list_cosine_similarity(
-                    CAST(e.embedding AS DOUBLE[]), d.dv), 6)
-                  / {BRP_BUCKET_LEN}) AS BIGINT) AS v
+             {BRP_BUCKET_SQL.format(e="CAST(e.embedding AS DOUBLE[])", d="d.dv")} AS v
       FROM embeddings e, d
     ),
     kb AS (SELECT j, v FROM b WHERE vec_id = 0),
@@ -106,11 +119,7 @@ def q_ann_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list(F.struct("j", "dv"))).alias("ds")
     )
     bucket_arr = F.transform(
-        F.col("ds"),
-        lambda s: F.floor(
-            F.round(cosine_sim(F.col("emb"), s["dv"]), 6)
-            / F.lit(BRP_BUCKET_LEN)
-        ),
+        F.col("ds"), lambda s: brp_bucket(F.col("emb"), s["dv"])
     )
     buckets = (
         t.embeddings.select(

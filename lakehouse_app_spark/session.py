@@ -79,23 +79,24 @@ if _MPB:
 # entries — same results, more compiles.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# The Python worker daemon, a static conf with the same contract as
+# CODEGEN_CACHE_ENTRIES: the engine's own session forks its workers
+# from `worker_daemon` (no per-task archive re-reads, a frozen
+# preloaded pandas/pyarrow heap), while a session handed in from
+# outside keeps the stock `pyspark.daemon`. See worker_daemon. The
+# daemon is started as `python -m` in the JVM's working directory, so
+# the package root goes on the workers' PYTHONPATH (after Spark's own
+# zips and before the inherited PYTHONPATH) for it to import from any
+# directory the driver runs in.
+WORKER_DAEMON_MODULE = "lakehouse_app_spark.worker_daemon"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Set runtime-settable confs on an existing session (idempotent).
-
-    Floor-shaving attempt recorded (round 8, negative result): the
-    transformWithStateInPandas driver-worker is a fresh interpreter
-    per query (StreamingPythonRunner → createSimpleWorker, no daemon)
-    whose cold `import pyspark` from pyspark.zip costs ~0.95 s vs
-    ~0.55 s from the unzipped source tree (zipimport cannot cache
-    .pyc). Prepending $SPARK_HOME/python to the worker PYTHONPATH via
-    SparkContext.environment does NOT capture the saving — the JVM
-    prepends sparkPythonPath (the zips) ahead of user PYTHONPATH at
-    worker launch, so the zip still wins resolution, while the env
-    mutation re-keys the daemon worker pool and forfeits warm
-    workers (A/B: floor 1.94-2.01 s stock vs 2.12-2.46 s injected).
-    The tws_floor_sec instrument in bench.py stays the honest
-    decomposition."""
+    Static confs (the codegen cache, the worker daemon) go on the
+    builder in `get_spark`; the worker-start story is in
+    `worker_daemon`'s docstring."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -150,6 +151,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if SparkSession.getActiveSession() is None:
         # managed tables (bucketed writers) land in a scratch dir, not

@@ -191,14 +191,16 @@ def write_snapshot(
     return version
 
 
-# (realpath, resolved version, manifest identity, fmt, dv chain,
+# (realpath, resolved version, manifest identities, fmt, dv chain,
 # dv key) -> analyzed relation for read_snapshot. Committed version
 # directories are immutable, so the handle is content-stable;
 # expiry/commit checks stay live in read_snapshot (see its comment).
-# Validated against the calling session on every hit. The manifest's
-# (st_ino, st_mtime_ns) rides in the key so a lineage wiped and
-# re-committed at the same path misses the memo instead of being
-# served a stale file listing (advice r14). LRU-bounded: scratch
+# Validated against the calling session on every hit. The
+# (st_ino, st_mtime_ns) of every manifest on the base chain, from
+# the requested version down to the materialized base, rides in the
+# key, so a lineage wiped and re-committed at the same path — or an
+# intermediate DV commit rewritten under a kept base — misses the
+# memo instead of being served a stale file listing. LRU-bounded: scratch
 # CLONES (q_vacuum/q_merge_multi mkdtemp trees) insert a fresh key
 # per invocation, so an unbounded dict pinned dead JVM plans for the
 # whole session (advice r14); past the bound, dead-session entries
@@ -251,6 +253,7 @@ def read_snapshot(
     dv_key = None
     man = _read_manifest(path, version)
     v = version
+    chain = [v]
     while man.get("base") is not None:
         dv_dirs.append(_os.path.join(path, f"dv={v}"))
         if dv_key is None:
@@ -260,6 +263,7 @@ def read_snapshot(
                 f"mixed dv_key along base chain of v{version} in {path}"
             )
         v = man["base"]
+        chain.append(v)
         man = _read_manifest(path, v)
     fmt = man.get("format", "parquet")
     # Memoized relation handle (r14 optimization): a committed
@@ -273,9 +277,10 @@ def read_snapshot(
     # so an expired version raises exactly as before; only the
     # immutable relation is served from the memo, validated against
     # the caller's session.
-    st = _os.stat(_os.path.join(path, f"_v{v}.json"))
+    stats = [_os.stat(_os.path.join(path, f"_v{c}.json")) for c in chain]
     key = (
-        _os.path.realpath(path), v, st.st_ino, st.st_mtime_ns, fmt,
+        _os.path.realpath(path), v,
+        tuple((st.st_ino, st.st_mtime_ns) for st in stats), fmt,
         tuple(dv_dirs), dv_key,
     )
     hit = _READ_HANDLES.get(key)

@@ -47,6 +47,53 @@ def test_cosine_self_similarity_is_one(spark, sf_dir):
     assert all(abs(r["s"] - 1.0) < 1e-9 for r in sims)
 
 
+def test_brp_bucket_ties_agree_with_duckdb(spark):
+    """q_ann_brp_lsh's bucket id at a bucket edge: seeded vectors whose
+    cosine with their direction lies within 1e-6 of a BRP_BUCKET_LEN
+    multiple — every third one on the 6-dp rounding's half-way point
+    below or above the edge, where one ulp of disagreement would flip
+    the bucket — get the same id from Spark's expression as from the
+    oracle's."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+
+    from lakehouse_app_spark.operators.ann import (
+        BRP_BUCKET_LEN, BRP_BUCKET_SQL, brp_bucket,
+    )
+
+    rng = np.random.default_rng(20)
+    ids, embs, dirs = [], [], []
+    for i in range(600):
+        d = rng.standard_normal(16)
+        u = d / np.linalg.norm(d)
+        w = rng.standard_normal(16)
+        w -= w.dot(u) * u
+        w /= np.linalg.norm(w)
+        edge = BRP_BUCKET_LEN * rng.integers(-1, 2)
+        off = (
+            rng.choice([-5e-7, 5e-7]) + rng.uniform(-1e-12, 1e-12)
+            if i % 3 == 0 else rng.uniform(-1e-6, 1e-6)
+        )
+        c = edge + off
+        ids.append(i)
+        embs.append(((c * u + np.sqrt(1 - c * c) * w) * rng.uniform(0.5, 2)).tolist())
+        dirs.append(d.tolist())
+    vecs = pa.table({"id": ids, "emb": embs, "dv": dirs})  # noqa: F841 (DuckDB scan)
+    duck = dict(duckdb.sql(
+        f"SELECT id, {BRP_BUCKET_SQL.format(e='emb', d='dv')} FROM vecs"
+    ).fetchall())
+    df = spark.createDataFrame(
+        list(zip(ids, embs, dirs)), "id long, emb array<double>, dv array<double>"
+    )
+    got = {
+        r.id: r.v
+        for r in df.select("id", brp_bucket(F.col("emb"), F.col("dv")).alias("v")).collect()
+    }
+    assert len(set(got.values())) > 2  # the sample straddles several edges
+    assert got == duck
+
+
 @pytest.fixture()
 def asof_fixture(spark):
     left = spark.createDataFrame(

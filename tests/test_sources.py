@@ -388,6 +388,46 @@ def test_read_handle_memo_bounded_and_invalidated(spark, sf_dir, tmp_path):
     assert len(sinks._READ_HANDLES) <= sinks._READ_HANDLES_MAX
 
 
+def test_read_handle_memo_keys_every_chain_manifest(spark, sf_dir, tmp_path):
+    """The memo key carries the stat of every manifest on the
+    merge-on-read base chain, not only the base's: rewriting an
+    intermediate DV commit (its manifest and sidecar) under a kept
+    base makes the next read of the head see the new deletes."""
+    import json
+    import os
+    import shutil
+
+    from lakehouse_app_spark.sources.sinks import (
+        delete_where_mor, read_snapshot, write_snapshot,
+    )
+
+    t = load_tables(spark, sf_dir)
+    small = t.nation.select("n_nationkey", "n_name").where("n_nationkey < 5")
+    path = str(tmp_path / "mor_tbl")
+    write_snapshot(small, path, "base")
+    v1 = delete_where_mor(spark, path, F.col("n_nationkey") == 0, "n_nationkey")
+    v2 = delete_where_mor(spark, path, F.col("n_nationkey") == 1, "n_nationkey")
+
+    def keys():
+        return sorted(r.n_nationkey for r in read_snapshot(spark, path, v2).collect())
+
+    assert keys() == [2, 3, 4]
+
+    # rewrite v1 in place: it now deletes key 2 instead of key 0
+    man = os.path.join(path, f"_v{v1}.json")
+    with open(man) as fh:
+        manifest = fh.read()
+    os.remove(man)
+    shutil.rmtree(os.path.join(path, f"dv={v1}"))
+    small.where("n_nationkey = 2").select("n_nationkey").coalesce(1).write.parquet(
+        os.path.join(path, f"dv={v1}")
+    )
+    with open(man, "w") as fh:
+        fh.write(manifest)
+    assert json.loads(manifest)["base"] == v1 - 1
+    assert keys() == [0, 3, 4]
+
+
 def test_copy_on_write_delete_update_and_dq_gate(spark, sf_dir, tmp_path):
     """DELETE/UPDATE as copy-on-write snapshot commits (old versions
     remain for time travel) and the write-time DQ gate aborting a bad
